@@ -400,13 +400,6 @@ def path_length(traj: Column, scale: int = 6) -> Column:
     ).cast("double")
 
 
-def avg_speed(traj: Column) -> Column:
-    """Length / duration (L2 ``tpoint_speed`` aggregate form), NULL for
-    zero-duration sequences."""
-    dur = duration_seconds(traj)
-    return F.when(dur > 0, path_length(traj) / dur)
-
-
 # --- rendering helpers -----------------------------------------------------
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"

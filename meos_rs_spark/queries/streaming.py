@@ -29,19 +29,18 @@ from meos_rs_spark.registry import register
 # micro-batch split of the input
 DEDUP_WATERMARK = "45 days"
 
-#: Event-time ingest sanity horizon (r16, r15 VERDICT item 3 — the
-#: time-axis ingest sibling of the XY envelope and the resample max-span
-#: gate). One corrupt far-future event-time kills a streaming deployment
-#: two independent ways, both measured on the value-extremes fixture:
-#: (1) a year-9999 instant ABORTS any Pandas-worker stateful operator
-#: (applyInPandasWithState converts Arrow→pandas INSIDE the engine, whose
-#: ns epoch ends at 2262 — one bad row wedges the stage-retry loop at
-#: 100 TB), and (2) a far-future sentinel CATAPULTS the watermark so
-#: every later well-formed batch silently drops (the r12-adjudicated
-#: premise violation). Production streaming systems reject such events at
-#: ingest; this gate is that rejection, applied SYMMETRICALLY — the Spark
-#: leg filters in :func:`_stream_events`, every event-time oracle reads
-#: the ``stream_events`` CTE carrying the identical predicate. Bounds are
+#: Event-time ingest sanity horizon (the time-axis ingest sibling of the
+#: XY envelope and the resample max-span gate). One corrupt far-future
+#: event-time kills a streaming deployment two independent ways, both
+#: measured on the value-extremes fixture: (1) a year-9999 instant ABORTS
+#: any Pandas-worker stateful operator (applyInPandasWithState converts
+#: Arrow→pandas INSIDE the engine, whose ns epoch ends at 2262 — one bad
+#: row wedges the stage-retry loop), and (2) a far-future sentinel
+#: CATAPULTS the watermark so every later well-formed batch silently
+#: drops. Production streaming systems reject such events at ingest; this
+#: gate is that rejection, applied SYMMETRICALLY — the Spark leg filters
+#: in :func:`_stream_events`, every event-time oracle reads the
+#: ``stream_events`` CTE carrying the identical predicate. Bounds are
 #: fixed validity limits strictly inside pandas' ns epoch
 #: (1677-09-21..2262-04-11); NULL event-times fail the predicate in both
 #: engines (a point in time that is NULL is not a point in time — same
@@ -90,8 +89,8 @@ def _sink_name(base: str, sf_dir: str) -> str:
     """Deterministic memory-sink view name per (call site, fixture dir).
 
     uuid-per-invocation names let every streaming run pin another full
-    result copy in the driver's memory sink for the session lifetime
-    (review find, r7 — the in-memory twin of the uuid-checkpoint leak).
+    result copy in the driver's memory sink for the session lifetime (the
+    in-memory twin of a uuid-checkpoint leak).
     A deterministic name is dropped and replaced on re-invocation, so at
     most one copy per (query, scale) is ever held; keying by sf_dir keeps
     a handle returned at one scale valid while another scale builds (the
@@ -104,9 +103,9 @@ def _sink_name(base: str, sf_dir: str) -> str:
     return f"{base}_{tag}"
 
 
-#: State-store partition count for the finite availableNow replays (r16
-#: optimization, guide §2.2 "fewer, larger reduce partitions"): streaming
-#: queries ignore AQE, so every stateful operator inherits the session's
+#: State-store partition count for the finite availableNow replays
+#: ("fewer, larger reduce partitions"): streaming queries ignore AQE, so
+#: every stateful operator inherits the session's
 #: full ``spark.sql.shuffle.partitions`` (32 here) as its state-store
 #: partition count — and each micro-batch then pays 32× state-store
 #: open/commit/checkpoint file IO for KB-scale state (measured:
@@ -122,45 +121,69 @@ _STREAM_STATE_MIN = 4
 _STREAM_STATE_MAX = 200
 
 
+def _visible(name: str) -> bool:
+    """Data file, not a marker/checksum (``_SUCCESS``, ``.crc``), by the
+    rule Spark's file index uses."""
+    return not name.startswith(("_", "."))
+
+
 def _backlog_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Source-backlog size in bytes: the events parquet when present, else
-    the directory's parquet total. Plain local paths read via ``os.*`` (no
-    JVM round-trip); URI paths (s3://, hdfs://, file://) go through the
-    Hadoop FileSystem API so an object-store deployment sizes correctly
-    instead of silently flooring at ``_STREAM_STATE_MIN`` (r16 VERDICT
-    item 2 — the old ``os.path``-only probe read 0 for any non-local
-    fixture location). Unreadable either way → 0 (the floor applies)."""
+    the total of the directory's ``*.parquet`` entries. Each entry may be a
+    single file or a dataset directory (nested layouts are summed
+    recursively). Plain local paths read via ``os.*`` (no JVM round-trip);
+    URI paths (s3://, hdfs://, file://) go through the Hadoop FileSystem
+    API, so a non-local fixture location sizes correctly instead of
+    flooring at ``_STREAM_STATE_MIN``. Unreadable either way → 0 (the
+    floor applies)."""
     import os
 
     if "://" not in sf_dir:
+
+        def tree(path: str) -> int:
+            if os.path.isfile(path):
+                return os.path.getsize(path)
+            return sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(path)
+                for f in files
+                if _visible(f)
+            )
+
         ev = os.path.join(sf_dir, "events.parquet")
         try:
-            if os.path.isfile(ev):
-                return os.path.getsize(ev)
+            if os.path.exists(ev):
+                return tree(ev)
             if os.path.isdir(sf_dir):
                 return sum(
-                    os.path.getsize(os.path.join(sf_dir, f))
+                    tree(os.path.join(sf_dir, f))
                     for f in os.listdir(sf_dir)
                     if f.endswith(".parquet")
-                    and os.path.isfile(os.path.join(sf_dir, f))
                 )
         except OSError:
             pass
         return 0
     try:  # Hadoop FS path — unavailable under Spark Connect (no _jvm)
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = spark._jvm.org.apache.hadoop.fs.Path
         ev = Path(sf_dir.rstrip("/") + "/events.parquet")
-        fs = ev.getFileSystem(hconf)
-        if fs.isFile(ev):
-            return fs.getFileStatus(ev).getLen()
+        fs = ev.getFileSystem(spark._jsc.hadoopConfiguration())
+
+        def fs_tree(path) -> int:
+            total, it = 0, fs.listFiles(path, True)  # recursive; a file lists itself
+            while it.hasNext():
+                st = it.next()
+                if _visible(st.getPath().getName()):
+                    total += st.getLen()
+            return total
+
+        if fs.exists(ev):
+            return fs_tree(ev)
         root = Path(sf_dir)
         if fs.isDirectory(root):
             return sum(
-                st.getLen()
+                fs_tree(st.getPath())
                 for st in fs.listStatus(root)
-                if st.isFile() and st.getPath().getName().endswith(".parquet")
+                if st.getPath().getName().endswith(".parquet")
             )
     except Exception:
         pass
@@ -194,7 +217,7 @@ class _stream_confs:
     policy for the duration of one availableNow run, restoring the
     session value afterwards.
 
-    SERIAL-EXECUTION ASSUMPTION (r16 ADVICE): "the batch planner never
+    SERIAL-EXECUTION ASSUMPTION: "the batch planner never
     sees the change" holds because this harness runs queries strictly
     sequentially on one session — a batch query planned CONCURRENTLY in
     the same session (or two overlapping streams with different sf_dirs)
@@ -345,8 +368,8 @@ def _accumulate_extent(state, pdf_iter):
     fold this batch's posits into the stored (n_points, min_ts_us,
     max_ts_us) GroupState and return the updated triple. ONE
     implementation so the replay twin and the evicting deployment recipe
-    cannot drift (r9 review find — same hazard class as the J5 grid
-    joins' shared `_adaptive_cell_stats`)."""
+    cannot drift (same hazard class as the J5 grid joins' shared
+    `_adaptive_cell_stats`)."""
     if state.exists:
         n, tmin, tmax = state.get
     else:
@@ -379,22 +402,29 @@ def _traj_state_fn(key, pdf_iter, state):
 
 def traj_state_fn_evicting(key, pdf_iter, state):
     """Long-lived variant of :func:`_traj_state_fn`: same accumulator, plus
-    event-time-timeout EVICTION for keys idle past the watermark horizon.
+    event-time-timeout EVICTION of vessels that have gone quiet.
 
     ``_traj_state_fn`` + ``NoTimeout`` is correct for the registered
     finite ``availableNow`` replay (state is bounded by the fixture's key
-    count), but a 100 TB deployment sees unbounded key churn — without an
-    eviction path the state store grows with every vessel EVER seen, which
-    is the canonical long-running-stream killer (r8 VERDICT item 7). This
+    count), but a long-running stream sees unbounded key churn: without an
+    eviction path the state store grows with every vessel ever seen. This
     variant is the deployment recipe: pair it with ``withWatermark`` and
-    ``timeoutConf=GroupStateTimeout.EventTimeTimeout``; a vessel idle for
-    ``_EVICT_IDLE_MS`` of event time past the watermark emits nothing
-    further and its state row is dropped (trajectory closed). A vessel
-    reappearing later starts a fresh trajectory — sessionized semantics,
-    matching the reference's gap-split assembly
-    (meos/examples/04_to_file.rs:92-116) rather than the replay twin's
-    whole-history extent. tools/probe_stream_state.py measures the
-    resulting flat-after-watermark state curve across ~100 micro-batches.
+    ``timeoutConf=GroupStateTimeout.EventTimeTimeout``.
+
+    Eviction rule: a vessel's state row is removed once the watermark
+    passes its LAST POSIT plus ``_EVICT_IDLE_MS`` of event time. The
+    timeout is anchored at the vessel's own latest event time, not at the
+    watermark: in a stream's first micro-batch the watermark is still 0,
+    and a watermark-anchored timeout would then expire every first-batch
+    vessel as soon as the watermark first advances, idle or not. Spark
+    rejects a timeout earlier than the current watermark, hence the
+    ``wm + 1`` floor (it only binds for a vessel whose newest posit is
+    already older than the horizon, which is then evicted at the next
+    watermark advance). An evicted vessel emits nothing further; if it
+    reappears it starts a fresh trajectory, which is the reference's
+    gap-split assembly (meos/examples/04_to_file.rs:92-116) rather than
+    the replay twin's whole-history extent. tools/probe_stream_state.py
+    measures the resulting flat state curve under key churn.
     """
     import pandas as pd
 
@@ -405,17 +435,15 @@ def traj_state_fn_evicting(key, pdf_iter, state):
         return
 
     n, tmin, tmax = _accumulate_extent(state, pdf_iter)
-    # evict once the watermark moves _EVICT_IDLE_MS past this batch — i.e.
-    # the vessel sent nothing for that long in event time (must be strictly
-    # beyond the current watermark, which max(wm, 0) + idle guarantees)
-    state.setTimeoutTimestamp(max(state.getCurrentWatermarkMs(), 0) + _EVICT_IDLE_MS)
+    wm = max(state.getCurrentWatermarkMs(), 0)
+    state.setTimeoutTimestamp(max(tmax // 1000 + _EVICT_IDLE_MS, wm + 1))
     yield pd.DataFrame(
         {"user_id": [key[0]], "n_points": [n], "t_start_us": [tmin], "t_end_us": [tmax]}
     )
 
 
-#: event-time idle horizon before a vessel's state row is evicted (10 min —
-#: the probe and tests override nothing; they drive event time instead)
+#: event-time idle horizon after a vessel's last posit before its state
+#: row is evicted (10 min)
 _EVICT_IDLE_MS = 600_000
 
 
@@ -424,19 +452,24 @@ _STATE_SCHEMA = "n long, tmin long, tmax long"
 
 
 def evicting_assembly(ev: DataFrame, watermark: str) -> DataFrame:
-    """The ONE construction of the evicting stateful pipeline: watermark →
-    per-vessel applyInPandasWithState with EventTimeTimeout eviction.
+    """The one construction of the evicting stateful pipeline: project to
+    ``user_id, ts`` → watermark → per-vessel applyInPandasWithState with
+    EventTimeTimeout eviction (a vessel's state is dropped once the
+    watermark passes its last posit + ``_EVICT_IDLE_MS``).
 
-    Shared by the registered ``stream_stateful_evicting`` (45-day watermark
-    so the finite replay keeps whole-history extents and the grouped-
-    assembly oracle stays exact), the key-churn pytest and the state-growth
-    probe (1-minute watermark so eviction actually fires). Factored so the
-    deployment recipe the probes measure is byte-for-byte the pipeline the
-    driver verifies."""
+    The accumulator reads only ``ts``, and applyInPandasWithState converts
+    every input column from Arrow to pandas per group, so the projection
+    comes first. Shared by the registered ``stream_stateful_evicting``
+    (45-day watermark: no vessel in the finite replay is idle that long,
+    so the grouped-assembly oracle stays exact), the key-churn and
+    eviction-timing tests and the state-growth probe (short watermarks so
+    eviction fires). The deployment recipe the probes measure is thus the
+    pipeline the registered query checks against its oracle."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        ev.withWatermark("ts", watermark)
+        ev.select("user_id", "ts")
+        .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             traj_state_fn_evicting,
@@ -478,7 +511,8 @@ FROM stream_events GROUP BY user_id
 def stream_stateful_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = _stream_events(spark, sf_dir)
+    # the accumulator reads only ts: convert no other column to pandas
+    ev = _stream_events(spark, sf_dir).select("user_id", "ts")
     out = (
         ev.groupBy("user_id")
         .applyInPandasWithState(
@@ -508,32 +542,34 @@ FROM stream_events GROUP BY user_id
     tags=("ST", "A5", "A6"),
     doc="the DEPLOYMENT shape of stateful trajectory assembly: same "
     "applyInPandasWithState accumulator, but with event-time-timeout "
-    "EVICTION active (watermark + setTimeoutTimestamp + hasTimedOut/"
-    "remove) so a long-running stream's state store stays bounded under "
-    "unbounded key churn; replayed availableNow, final state must still "
-    "equal the batch aggregate",
+    "EVICTION active (a vessel's state is dropped once the watermark passes "
+    "its last posit + 10 min) so a long-running stream's state store stays "
+    "bounded under unbounded key churn; replayed availableNow, final state "
+    "must still equal the batch aggregate",
 )
 def stream_stateful_evicting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered twin of :func:`stream_stateful_assembly` running the
-    eviction-capable state function (r9 VERDICT item 3: the deployment
-    recipe earns its own driver CORRECTNESS row instead of living only as
-    a helper + pytest).
+    eviction-capable state function, so the deployment recipe carries its
+    own oracle-checked registry entry instead of living only as a helper +
+    test.
 
-    Why the whole-history oracle is exact here: the fixture is ONE
-    parquet file, so the availableNow file source replays it as ONE data
-    micro-batch — the watermark is still at its initial value while every
-    posit is processed (nothing is late; the 45-day
-    :data:`DEDUP_WATERMARK` delay keeps it below the ~30-day event span
-    regardless, tests/test_streaming_bounds.py), so each vessel's final
-    update-mode emission carries its whole-history extent. Timeouts fire
-    only at a later batch boundary; an eviction there removes state and
-    emits nothing, leaving the emitted extents untouched. (Under a
-    hypothetical multi-batch split with a vessel idle past the horizon
-    MID-replay, the query would degrade to its deployment semantics —
-    sessionized gap-split extents — which is the designed long-stream
-    behavior, not the replay twin's.) The SAME pipeline under a short
-    watermark demonstrably evicts: the key-churn pytest and
-    tools/probe_stream_state.py drive it at 1 minute.
+    Why the whole-history oracle is exact here: the fixture is one parquet
+    file, so the availableNow file source replays it as one data
+    micro-batch, followed by one closing no-data batch once the watermark
+    has advanced. Every posit is processed in the data batch (nothing is
+    late), so each vessel's update-mode emission carries its whole-history
+    extent. A vessel is evicted only once the watermark passes its last
+    posit + ``_EVICT_IDLE_MS``; the watermark trails the newest posit by the
+    45-day :data:`DEDUP_WATERMARK` delay, longer than the ~30-day event span
+    (tests/test_streaming_bounds.py), so the closing batch evicts no one
+    and state ends holding every vessel. Had an eviction fired, it would
+    remove state and emit nothing, leaving the emitted extents untouched.
+    Under a multi-batch split with a vessel idle past the horizon
+    mid-replay, the query degrades to its deployment semantics
+    (sessionized gap-split extents), which is the designed long-stream
+    behaviour. The same pipeline under a short watermark does evict: the
+    key-churn and eviction-timing tests and tools/probe_stream_state.py
+    drive it at 1 minute.
     Reference semantics: incremental trajectory upsert,
     meos-polars/examples/ais_to_db.rs:156-161; gap-split assembly,
     meos/examples/04_to_file.rs:92-116."""
@@ -650,7 +686,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the staging lifecycle (atexit removal + stale-sibling prune): a
     # store keyed only by the fixture tag was shared across concurrent
     # sessions — one session's reset rmtree raced another's appends — and
-    # leaked past exit (review find, r7; same class as the checkpoint leak)
+    # leaked past exit (same class as the checkpoint leak)
     from meos_rs_spark.functions.staging import adopt_app_dir
 
     ckpt_root = os.path.join(tempfile.gettempdir(), "meos_rs_spark_ckpt")
@@ -861,7 +897,7 @@ def _arrival_split(part: int):
 
     The oracle's count(*) covers ALL rows, so the split must PARTITION the
     table: a bare ``event_id % 2 == part`` predicate is NULL for NULL keys
-    and silently drops the row from BOTH arrivals (r12 ADVICE). coalesce
+    and silently drops the row from BOTH arrivals. coalesce
     routes NULL keys deterministically to arrival 0.
     """
     return F.coalesce(F.col("event_id"), F.lit(0)) % 2 == part
@@ -875,10 +911,9 @@ SELECT user_id, count(*) AS n_events,
 FROM events GROUP BY user_id
 """,
     tags=("ST", "S6"),
-    doc="restart recovery + sink idempotence (r10 VERDICT item 6 — the "
-    "long-lived deployment shape the availableNow replays never exercised, "
-    "registered): THREE availableNow runs share ONE checkpoint over a "
-    "split-arrival source. Run 1 aggregates arrival 0 only; run 2 is a "
+    doc="restart recovery + sink idempotence (the long-lived deployment "
+    "shape the availableNow replays never exercise): THREE availableNow "
+    "runs share ONE checkpoint over a split-arrival source. Run 1 aggregates arrival 0 only; run 2 is a "
     "RESTART — the file-source offset log skips arrival 0's files, the "
     "state store restores its counts, and only arrival 1 is read, so a "
     "correct full answer PROVES state recovery; run 3 restarts with no new "

@@ -160,24 +160,25 @@ def test_continuous_trigger_runs_map_only_pipeline(spark):
 
 
 def test_evicting_stateful_assembly_bounds_state_under_key_churn(spark):
-    """The REGISTERED ``stream_stateful_evicting`` pipeline (r9 VERDICT
-    item 3 promoted the r8-item-7 recipe to a driver-verified query): with
-    every row a brand-new key and event time driven by the data, the state
-    store must evict keys idle past the watermark+idle horizon instead of
-    growing with every key ever seen — the registered NoTimeout
-    accumulator is availableNow-replay-only. Same ``evicting_assembly``
-    builder the registered query runs, just under a 1-minute watermark so
-    eviction fires inside the test window."""
+    """The registered ``stream_stateful_evicting`` pipeline under unbounded
+    key churn: with every row a brand-new key and event time driven by the
+    data, the state store must evict each key once the watermark passes
+    its last posit + the idle horizon, instead of growing with every key
+    ever seen — the registered NoTimeout accumulator is
+    availableNow-replay-only. Same ``evicting_assembly`` builder the
+    registered query runs, just under a 1-minute watermark so eviction
+    fires inside the test window."""
     from meos_rs_spark.queries.streaming import evicting_assembly
     from tools.probe_stream_state import _ROWS_PER_BATCH, _source, drive
 
     out = evicting_assembly(_source(spark), "1 minute")
     curve = drive(spark, out, n_batches=15, deadline_s=120)
     assert curve, "no state metrics reported"
-    # keys seen so far grow 600/batch forever; retained state is bounded by
-    # the ~660 s event-time horizon (1 min watermark + 10 min idle), so
-    # once enough batches commit the store must hold well under half of
-    # them. Below ~8 batches the horizon hasn't emptied relative to the
+    # keys seen so far grow 600/batch forever; a key is evicted once the
+    # watermark (1 min behind the newest posit) passes its last posit +
+    # 10 min, so retained state covers the ~660 s before the newest posit
+    # and once enough batches commit the store must hold well under half
+    # of them. Below ~8 batches the horizon hasn't emptied relative to the
     # total and the 0.5 bound is not yet meaningful — a host-noise stall
     # (this VM's documented multi-× slowdowns) must read as inconclusive,
     # not as an eviction failure.
@@ -188,6 +189,40 @@ def test_evicting_stateful_assembly_bounds_state_under_key_churn(spark):
         )
     total_keys = (curve[-1]["batch"] + 1) * _ROWS_PER_BATCH
     assert 0 < curve[-1]["rows"] < total_keys * 0.5, (curve[-1], total_keys)
+
+
+def test_evicting_timeout_anchors_at_each_keys_last_posit(spark):
+    """Eviction timing, exactly: a key is removed in the first micro-batch
+    whose watermark passes its last posit + ``_EVICT_IDLE_MS``, and no
+    earlier. A watermark-anchored timeout set in the first micro-batch
+    (watermark still 0) would instead expire every batch-0 key as soon as
+    the watermark first advances, idle or not.
+
+    Source: 600 new keys per batch, key v posted at ``_EPOCH_S`` + v s.
+    Under a 1-minute watermark, batch b evicts with watermark
+    ``_EPOCH_S + 600 b - 61`` s, which has passed key v's horizon
+    (v + 600 s) for every v <= 600 b - 662: batch 1 removes 0 rows,
+    batch 2 removes 539, every later batch 600."""
+    from meos_rs_spark.queries.streaming import _EVICT_IDLE_MS, evicting_assembly
+    from tools.probe_stream_state import _ROWS_PER_BATCH, _source, drive
+
+    curve = drive(
+        spark, evicting_assembly(_source(spark), "1 minute"), n_batches=5,
+        deadline_s=120,
+    )
+    if not curve or curve[-1]["batch"] < 3:
+        pytest.skip("fewer than 4 batches committed in 120s — host too slow")
+
+    def evicted_by(b: int) -> int:
+        """Keys removed by the end of batch b: every v with
+        v + idle < watermark, the watermark being the newest posit so far
+        (rows * b - 1 s) less the 60 s delay."""
+        return max(0, _ROWS_PER_BATCH * b - 61 - _EVICT_IDLE_MS // 1000)
+
+    for c in curve:
+        b = c["batch"]
+        assert c["removed"] == evicted_by(b) - evicted_by(b - 1), c
+        assert c["rows"] == _ROWS_PER_BATCH * (b + 1) - evicted_by(b), c
 
 
 def test_continuous_trigger_rejects_aggregation(spark):

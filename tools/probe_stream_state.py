@@ -1,4 +1,4 @@
-"""Round-9 streaming state-growth probe (r8 VERDICT item 7).
+"""Streaming state-growth probe.
 
 The registered streaming queries prove CORRECTNESS over finite
 ``availableNow`` replays, and the continuous pins prove liveness over many
@@ -7,8 +7,10 @@ measured, and unbounded state is the 100 TB streaming killer. This drives
 four long-lived stateful shapes across ~100 micro-batches each, over a
 deterministic ``rate-micro-batch`` source whose KEY CARDINALITY GROWS
 WITHOUT BOUND (every row a brand-new key) and whose event time is derived
-from ``value`` (1 s per row), so watermark motion is data-driven and the
-curves are wall-clock-independent:
+from ``value`` (1 s per row, offset to a realistic epoch so the first
+batch's watermark of 0 lies far behind the data, as in any real stream),
+so watermark motion is data-driven and the curves are
+wall-clock-independent:
 
 1. ``window_agg``   — watermarked tumbling-window count (engine eviction);
 2. ``dedup``        — watermarked dropDuplicates (the dedup recipe);
@@ -19,11 +21,11 @@ curves are wall-clock-independent:
    leg. Correct for finite replay, documented-unbounded here — it must
    show monotone growth, proving the instrument detects the failure mode.
 
-Per batch (from ``recentProgress``): state rows, state memory bytes,
-watermark. Verdict per leg: FLAT when the max state-row count over the
-last quarter of batches is within ``_FLAT_TOL`` of the second quarter's
-(the watermark horizon fills during the first quarter); the control leg
-must NOT be flat.
+Per batch (from ``recentProgress``): state rows, rows removed, state
+memory bytes, watermark. Verdict per leg: FLAT when the max state-row
+count over the last quarter of batches is within ``_FLAT_TOL`` of the
+second quarter's (the watermark horizon fills during the first quarter);
+the control leg must NOT be flat.
 
 ``python -m tools.probe_stream_state [n_batches] [out_json]`` prints a
 markdown fragment for SCALE_r09.md and writes the raw curves as JSON.
@@ -46,11 +48,13 @@ import pyspark.sql.functions as F  # noqa: E402
 _FLAT_TOL = 1.25
 
 _ROWS_PER_BATCH = 600  # event time advances 600 s per batch (1 s per row)
+_EPOCH_S = 1_700_000_000  # event time of value 0 (2023-11-14 22:13:20 UTC)
 
 
 def _source(spark):
     """Unbounded deterministic source: one NEW key per row, event time =
-    epoch + value seconds (data-driven watermark, no wall-clock coupling)."""
+    ``_EPOCH_S`` + value seconds (data-driven watermark, no wall-clock
+    coupling)."""
     return (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", str(_ROWS_PER_BATCH))
@@ -58,7 +62,7 @@ def _source(spark):
         .load()
         .select(
             F.col("value").alias("user_id"),  # unbounded key churn
-            F.timestamp_seconds(F.col("value")).alias("ts"),
+            F.timestamp_seconds(F.col("value") + _EPOCH_S).alias("ts"),
             (F.col("value") % 97).cast("double").alias("lon"),
         )
     )
@@ -97,7 +101,7 @@ def _legs(spark) -> dict:
 
 def drive(spark, df, n_batches: int, deadline_s: float = 600.0) -> list[dict]:
     """Run ``df`` to a memory sink until ``n_batches`` commit; return the
-    per-batch state curve [{batch, rows, bytes, watermark}, ...]."""
+    per-batch state curve [{batch, rows, removed, bytes, watermark}, ...]."""
     # recentProgress retains the last N updates — size it to the run
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", str(n_batches + 20))
     q = (
@@ -136,6 +140,7 @@ def drive(spark, df, n_batches: int, deadline_s: float = 600.0) -> list[dict]:
             {
                 "batch": p["batchId"],
                 "rows": sum(o.get("numRowsTotal", 0) for o in ops),
+                "removed": sum(o.get("numRowsRemoved", 0) for o in ops),
                 "bytes": sum(o.get("memoryUsedBytes", 0) for o in ops),
                 "watermark": p.get("eventTime", {}).get("watermark"),
             }
